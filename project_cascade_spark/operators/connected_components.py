@@ -21,6 +21,7 @@ a collect of the edges.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,8 +82,19 @@ def _local_union_find(rows: list, spark) -> DataFrame:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    out = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(out, "id long, cluster_id long")
+    ids = list(parent)
+    # Built from an Arrow table, which plans as a LocalTableScan (empty or
+    # not).  createDataFrame(list) would run a pickled Python-RDD job
+    # instead, and that runner does not set SPARK_SIMPLIFIED_TRACEBACK
+    # while the Arrow UDF runner does.  Spark keys its Python worker
+    # factory on the worker environment, so that one job would start a
+    # second pyspark.daemon with its own pool of workers.  (A pandas frame
+    # is no fix: an empty one falls back to the RDD path.)
+    table = pa.table({
+        "id": pa.array(ids, pa.int64()),
+        "cluster_id": pa.array([find(x) for x in ids], pa.int64()),
+    })
+    return spark.createDataFrame(table, "id long, cluster_id long")
 
 
 def connected_components(

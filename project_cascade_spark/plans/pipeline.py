@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -201,6 +202,16 @@ def dedup_pipeline(
     # chain of upstream stage names, so parallel run() calls would race it.
     overlap = store is None
 
+    def submit(pool, stage, fn):
+        # the pool thread takes the caller's local properties (job
+        # description included), so its jobs are labelled like the
+        # caller's.  One wrap per task: each wrap holds its own copy, and
+        # Spark updates that copy in place (SQL execution ids) while the
+        # thread's jobs run.
+        return pool.submit(
+            inheritable_thread_target(code_files.sparkSession)(run), stage, fn
+        )
+
     def _signatures() -> DataFrame:
         # persisted: candidate_pairs self-joins the band table, so an
         # unpersisted signature column would run the minhash kernel TWICE
@@ -241,10 +252,10 @@ def dedup_pipeline(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=3) as pool:
-            f_sig = pool.submit(run, "03a_signatures", _signatures)
-            f_short = pool.submit(run, "04a_simhash", _short_sim)
+            f_sig = submit(pool, "03a_signatures", _signatures)
+            f_short = submit(pool, "04a_simhash", _short_sim)
             f_fps = (
-                pool.submit(run, "08a_fingerprints_pos", _fps)
+                submit(pool, "08a_fingerprints_pos", _fps)
                 if with_substring_pass else None
             )
             signatures = f_sig.result()
@@ -334,8 +345,8 @@ def dedup_pipeline(
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
         with _TPE(max_workers=2) as pool2:
-            f_edges = pool2.submit(run, "05_edges", _edges)
-            f_cand = pool2.submit(run, "08b_anchor_cands", _anchor_cand)
+            f_edges = submit(pool2, "05_edges", _edges)
+            f_cand = submit(pool2, "08b_anchor_cands", _anchor_cand)
             edges = f_edges.result()
             anchor_cand = f_cand.result()
     else:

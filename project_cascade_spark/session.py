@@ -11,9 +11,11 @@ same resume semantics.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 
@@ -77,50 +79,84 @@ def build_session(
 
 
 _WARMED: set[str] = set()
+_log = logging.getLogger(__name__)
 
 
 def _warm_python_workers(spark: SparkSession) -> None:
-    """Pre-spawn the Arrow Python worker pool and JIT-warm the nested-type
-    converters with one synthetic job (spark.range → struct-of-arrays
-    pandas UDF → noop sink, one task per core).
+    """JIT-warm the engine at session build: three tiny synthetic jobs
+    (below) that touch no input data and retain no result.  Disable with
+    CASCADE_WARM_WORKERS=0.
 
-    Every Python worker pays ~1.5-2 s of CPU importing pandas/pyarrow the
-    first time a vectorized UDF runs; at local[32] that is ~60 s-CPU
-    charged to whichever query or pipeline stage happens to run first.
-    On the JVM side, the Arrow→UnsafeRow converter loops for nested types
-    (struct of array<string>/array<bigint> — the shape every signature
-    kernel returns) JIT-compile only after real volume has passed through
-    them, which otherwise lands inside the first query that uses a
-    kernel (~2-2.5 s of its wall, measured cold-vs-warm at sf0.1).  ~100
-    rows per core of realistic array widths through a noop sink is the
-    measured saturation point — more volume buys nothing.  Production
-    clusters amortize both costs over long-lived executors; doing it at
-    session build moves them out of every measured operator without
-    touching any input data or retaining any result.  Disable with
-    CASCADE_WARM_WORKERS=0."""
+    Run back to back in this order at local[4] on a 4-core host, cold
+    then warm: struct UDF 6.9-7.2 s then 0.5-0.6 s, exchange 3.2-3.4 s
+    then 0.8-0.9 s, dedup chain 4.8-5.4 s then 1.9-2.0 s.  The cold excess
+    is first-use class loading and JIT (about 7,400, 2,300 and 1,100
+    classes; 10-15 s of JVM CPU per step), mostly on the driver, with the
+    cores partly idle.  Skipping the warm-up only moves that cost into
+    the first real query.  The steps share no state, so they run from
+    three threads and are joined here: the same work in 12.6-13.1 s
+    instead of about 15.4 s back to back.  Production executors reach
+    this steady state in their first minutes; the warm-up reproduces it
+    before any measured query.
+
+    Fail-soft: a step that raises is logged and skipped, so a broken
+    warm-up gives a cold start, never a failed build_session."""
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED:
         return
     _WARMED.add(app_id)
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from concurrent.futures import ThreadPoolExecutor
 
-    # A struct-of-arrays return type, deliberately: the measured per-worker
-    # first-use cost (~3 s-CPU each) comes from the NESTED-type
-    # Arrow↔pandas conversion stack, which a flat long→long warm-up does
-    # not touch.  functionType form: the decorator form needs pd.Series
-    # type hints, which "from __future__ import annotations" turns into
-    # strings that cannot resolve with a function-local pandas import.
-    def _wf(s):
-        import pandas as pd
+    from pyspark import inheritable_thread_target
 
+    # looked up at call time, so each step can be replaced in tests
+    jobs = {
+        "struct_udf": _warm_struct_udf,
+        "exchange": _warm_exchange,
+        "dedup_chain": _warm_dedup_chain,
+    }
+    sc = spark.sparkContext
+
+    def _run(name, job):
+        sc.setJobDescription(f"session.warmup.{name}")
+        try:
+            job(spark)
+        except Exception:  # noqa: BLE001 — fail soft: a cold start
+            _log.warning("session warm-up step %s failed; continuing cold",
+                         name, exc_info=True)
+        finally:
+            sc.setJobDescription(None)
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(_run), name, job)
+            for name, job in jobs.items()
+        ]
+        for f in futures:
+            f.result()
+
+
+def _warm_struct_udf(spark: SparkSession) -> None:
+    """Spawn the Arrow Python worker pool (one task per core) and warm the
+    nested-type converters.  Every worker pays ~1.5-2 s of CPU importing
+    pandas/pyarrow the first time a vectorized UDF runs.  On the JVM side
+    the Arrow→UnsafeRow converter loops for nested types (struct of
+    array<string>/array<bigint>, the shape every signature kernel returns)
+    JIT-compile only after real volume has passed through them.  ~100 rows
+    per core of realistic array widths is the measured saturation point.
+
+    A struct-of-arrays return type, deliberately: the per-worker first-use
+    cost comes from the NESTED-type Arrow↔pandas conversion stack, which a
+    flat long→long UDF does not touch."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("struct<a: array<string>, b: array<bigint>>")
+    def warm(s: pd.Series) -> pd.DataFrame:
         n = len(s)
         a = ["w%03d" % i for i in range(60)]
         b = list(range(132))
         return pd.DataFrame({"a": [a] * n, "b": [b] * n})
 
-    warm = pandas_udf(
-        _wf, "struct<a: array<string>, b: array<bigint>>", PandasUDFType.SCALAR
-    )
     n = spark.sparkContext.defaultParallelism
     # noop write, not count(): the sink materializes every struct value
     # through the Arrow→UnsafeRow converters (guide §1.4) — a count can
@@ -129,13 +165,14 @@ def _warm_python_workers(spark: SparkSession) -> None:
         "noop"
     ).mode("overwrite").save()
 
-    # One TINY structural job (2k long rows: exchange → aggregate →
-    # broadcast join → window) initializes the shuffle writer/reader,
-    # broadcast, and window execution machinery that the first real query
-    # otherwise pays for inside its measured wall (~1-1.4 s at local[32],
-    # measured cold-vs-warm).  Deliberately tiny and flat-typed: a
-    # heavier warm-up that mimicked real join volume measured NET
-    # NEGATIVE (GC/code-cache churn) — see OPTIMIZATION_r06.md §6c.
+
+def _warm_exchange(spark: SparkSession) -> None:
+    """One TINY structural job (2k long rows: exchange → aggregate →
+    broadcast join → window) initializes the shuffle writer/reader,
+    broadcast and window execution machinery that the first real query
+    otherwise pays for inside its measured wall.  Deliberately tiny and
+    flat-typed: a heavier warm-up that mimicked real join volume measured
+    NET NEGATIVE (GC/code-cache churn) — see OPTIMIZATION_r06.md §6c."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -151,18 +188,17 @@ def _warm_python_workers(spark: SparkSession) -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # Engine warm-up: run the CORE dedup chain (fused shingle+signature
-    # kernel → band self-join → exact-Jaccard verify → connected
-    # components → cluster attach) over 50 SYNTHETIC documents derived
-    # from spark.range — the whole-stage-codegen classes and kernel
-    # worker paths of the flagship operators compile here (~5-6 s of
-    # session-build time at local[32]) instead of inside the first real
-    # query's measured wall (~3-4 s recovered, cold-vs-warm interleaved).
-    # No input data is read, no result is retained (the 50-row
-    # checkpoint is dropped with the frame); every real query still
-    # computes from its parquet inputs from scratch.  Long-lived
-    # production executors reach this steady state within their first
-    # minutes regardless — the warm-up reproduces it at session build.
+
+def _warm_dedup_chain(spark: SparkSession) -> None:
+    """Run the CORE dedup chain (fused shingle+signature kernel → band
+    self-join → exact-Jaccard verify → connected components → cluster
+    attach) over 50 SYNTHETIC documents derived from spark.range, so the
+    whole-stage-codegen classes and kernel worker paths of the flagship
+    operators compile here instead of inside the first real query.  The
+    50-row checkpoint is dropped with the frame; every real query still
+    computes from its inputs from scratch."""
+    from pyspark.sql import functions as F
+
     from .config import DEFAULT_CONFIG
     from .functions.kernels import make_word_shingles_sig_udf
     from .functions.text import normalize_ws

@@ -38,6 +38,7 @@ import hashlib
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -157,13 +158,26 @@ class StageStore:
             df.write.mode("overwrite").parquet(path)
             per_file = self._footer_counts(path)
         n = sum(c for _, c in per_file)
+        # ledger rows go through Arrow tables (LocalTableScan), not
+        # createDataFrame(list): that runs a pickled Python-RDD job, which
+        # starts a second Python worker pool (see
+        # connected_components._local_union_find)
         lineage = self.spark.createDataFrame(
-            [(stage, f, c) for f, c in per_file],
+            pa.table({
+                "stage": pa.array([stage] * len(per_file), pa.string()),
+                "part": pa.array([f for f, _ in per_file], pa.string()),
+                "n_rows": pa.array([c for _, c in per_file], pa.int64()),
+            }),
             "stage string, part string, n_rows long",
         )
         lineage.write.mode("append").parquet(f"{self.root}/_lineage")
         state = self.spark.createDataFrame(
-            [(stage, n, time.time() - t0, snapshot_id)],
+            pa.table({
+                "stage": pa.array([stage], pa.string()),
+                "n_rows": pa.array([n], pa.int64()),
+                "wall_s": pa.array([time.time() - t0], pa.float64()),
+                "snapshot_id": pa.array([snapshot_id], pa.int64()),
+            }),
             "stage string, n_rows long, wall_s double, snapshot_id long",
         )
         state.write.mode("append").parquet(f"{self.root}/_state")

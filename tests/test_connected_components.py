@@ -47,3 +47,19 @@ def test_driver_union_find_matches_distributed(spark):
     dist = _cc(spark, edges, driver_threshold=0)
     local = _cc(spark, edges, driver_threshold=10**6)
     assert dist == local
+
+
+@pytest.mark.parametrize(
+    "edges, want",
+    [([(1, 2), (2, 3), (8, 7)], {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}), ([], {})],
+)
+def test_driver_union_find_plans_local_table_scan(spark, edges, want):
+    """The small-regime result is a LocalTableScan, never an RDD scan: a
+    pickled Python-RDD job would start a second Python worker pool."""
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    out = connected_components(df, driver_threshold=10**6)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "simple"
+    )
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert {r["id"]: r["cluster_id"] for r in out.collect()} == want
