@@ -34,3 +34,6 @@ oracle.py                DuckDB-dialect SQL generators mirroring every
 """
 
 __version__ = "0.1.0"
+
+# imported by every Python worker that unpickles a package UDF
+from . import _pyworker  # noqa: E402,F401

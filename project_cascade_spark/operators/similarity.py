@@ -249,6 +249,13 @@ def ivf_topk(
       through one task (north_rule skew salting);
     - ties (equal cosine to two centroids) break toward the smaller cell
       id, matching the oracle's ORDER BY cosine DESC, cid ASC.
+
+    Contract: scoring_corpus, when given, must hold exactly the same
+    (id_col, vec_col) rows as corpus.  It exists only so a caller can pass
+    the identical source without its balancing repartition; candidates come
+    from corpus and are inner-joined to scoring_corpus unchecked, so a
+    missing row silently drops candidates and a differing vector is scored
+    as given.
     """
     if centroids is not None:
         cents = [(int(i), [float(x) for x in centroids[i]])
@@ -388,6 +395,9 @@ def srp_lsh_topk(
     - the bucket self-join and the cross-table dropDuplicates carry IDS
       ONLY — full vectors are re-joined once per side afterwards, so no
       shuffle ever moves a vector more than once.
+
+    scoring_corpus carries the same contract as in ivf_topk: exactly the
+    (id_col, vec_col) rows of corpus, or None.
     """
     # bucket table carries (id, table, bucket) — no vectors
     if use_kernel:

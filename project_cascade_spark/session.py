@@ -88,16 +88,16 @@ def _warm_python_workers(spark: SparkSession) -> None:
     CASCADE_WARM_WORKERS=0.
 
     Run back to back in this order at local[4] on a 4-core host, cold
-    then warm: struct UDF 6.9-7.2 s then 0.5-0.6 s, exchange 3.2-3.4 s
-    then 0.8-0.9 s, dedup chain 4.8-5.4 s then 1.9-2.0 s.  The cold excess
-    is first-use class loading and JIT (about 7,400, 2,300 and 1,100
-    classes; 10-15 s of JVM CPU per step), mostly on the driver, with the
-    cores partly idle.  Skipping the warm-up only moves that cost into
-    the first real query.  The steps share no state, so they run from
-    three threads and are joined here: the same work in 12.6-13.1 s
-    instead of about 15.4 s back to back.  Production executors reach
-    this steady state in their first minutes; the warm-up reproduces it
-    before any measured query.
+    then warm: struct UDF 7.3-7.6 s then 0.25 s, exchange 3.2-3.5 s then
+    1.2 s, dedup chain 4.6-4.9 s then 1.5-1.8 s.  The cold excess is
+    first-use class loading and JIT (about 7,400, 2,300 and 1,100 classes;
+    10-15 s of JVM CPU per step), mostly on the driver, with the cores
+    partly idle.  Skipping the warm-up only moves that cost into the first
+    real query.  The steps share no state, so they run from three threads
+    and are joined here: the same work in 12.5-12.9 s instead of about
+    15.6 s back to back.  Production executors reach this steady state in
+    their first minutes; the warm-up reproduces it before any measured
+    query.
 
     Fail-soft: a step that raises is logged and skipped, so a broken
     warm-up gives a cold start, never a failed build_session."""
@@ -152,6 +152,10 @@ def _warm_struct_udf(spark: SparkSession) -> None:
 
     @pandas_udf("struct<a: array<string>, b: array<bigint>>")
     def warm(s: pd.Series) -> pd.DataFrame:
+        # pickled by value, so import the package explicitly: every
+        # worker spawned here then carries the _pyworker backport
+        import project_cascade_spark  # noqa: F401
+
         n = len(s)
         a = ["w%03d" % i for i in range(60)]
         b = list(range(132))
